@@ -30,6 +30,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from dwh_spark.fixtures import hold
+
 N_PLANES = 8
 DIM = 64
 
@@ -431,10 +433,7 @@ def semantic_prune_vectorized_skew_split(
     import numpy as np
 
     assign = assign_cells_vectorized if vectorized_assign else assign_cells
-    cells = assign(vectors, centroids, vec=vec, key=key).persist()
-    while _SKEW_CELLS_CACHE:
-        _SKEW_CELLS_CACHE.pop().unpersist()
-    _SKEW_CELLS_CACHE.append(cells)
+    (cells,) = hold("skew_cells", assign(vectors, centroids, vec=vec, key=key))
     hot = discover_hot_cells(cells, hot_fraction=hot_fraction, key=key)
     is_hot = F.col("cell").isin(hot) if hot else F.lit(False)
 
@@ -513,17 +512,11 @@ def discover_hot_cells(
     return sorted(int(r["key"]) for r in rows)
 
 
-# at most one live persisted cell-assignment frame for the skew-split
-# prunes (single-live rotation, as _TRAINED_CACHE). Shared by the fold
-# and BLAS variants deliberately: invoking one while a PREVIOUS call's
+# The fold and BLAS skew-split prunes share the one "skew_cells" slot
+# (fixtures.hold) deliberately: invoking one while a PREVIOUS call's
 # lazy result is still unconsumed unpersists that result's cells —
 # safe (assign_cells is deterministic, Spark recomputes) but slower;
 # consume one skew-split result before starting the next.
-_SKEW_CELLS_CACHE: list = []
-
-# at most one live persisted batch-cell frame for the incremental
-# ingest probe's prune_cells path (same single-live rotation)
-_PROBE_CELLS_CACHE: list = []
 
 
 def semantic_prune_skew_split(
@@ -558,10 +551,7 @@ def semantic_prune_skew_split(
     only changes WHERE a pair is evaluated. The planted-skew test pins
     multiset equality.
     """
-    cells = assign_cells(vectors, centroids, vec=vec, key=key).persist()
-    while _SKEW_CELLS_CACHE:
-        _SKEW_CELLS_CACHE.pop().unpersist()
-    _SKEW_CELLS_CACHE.append(cells)
+    (cells,) = hold("skew_cells", assign_cells(vectors, centroids, vec=vec, key=key))
     hot = discover_hot_cells(cells, hot_fraction=hot_fraction, key=key)
     is_hot = F.col("cell").isin(hot) if hot else F.lit(False)
     a = cells.select(
@@ -941,15 +931,10 @@ def semantic_incremental_near_dups(
     """
     new_cells = assign_cells(new_vecs, centroids, vec=vec, key=key)
     if prune_cells:
-        # single-live rotation (as _SKEW_CELLS_CACHE): the persist
-        # serves the probed-cell collect AND the returned lazy probe;
-        # the NEXT prune_cells call unpersists it, so at most one
-        # batch-cell frame stays cached per session instead of one
-        # per ingest call.
-        new_cells = new_cells.persist()
-        while _PROBE_CELLS_CACHE:
-            _PROBE_CELLS_CACHE.pop().unpersist()
-        _PROBE_CELLS_CACHE.append(new_cells)
+        # the persist serves the probed-cell collect AND the returned
+        # lazy probe; the slot bounds the session to one batch-cell
+        # frame instead of one per ingest call
+        (new_cells,) = hold("probe_cells", new_cells)
         probed = [r["cell"] for r in new_cells.select("cell").distinct().collect()]
         corpus_cells = corpus_cells.filter(F.col("cell").isin(probed))
     return cell_probe(corpus_cells, new_cells, threshold, vec=vec, key=key)
@@ -961,10 +946,6 @@ def semantic_incremental_near_dups(
 # at transformer dims pass a lower max_cells or raise rows_per_cell).
 _MIN_CELLS = 4
 _MAX_CELLS = 65536
-
-# at most one live persisted trained-centroid frame (same single-live
-# rotation as plans/documents.py:_CORPUS_SEM_CACHE)
-_TRAINED_CACHE: list = []
 
 
 def train_semantic_cells(
@@ -1037,15 +1018,14 @@ def train_semantic_cells(
         .orderBy(F.md5(F.col(key).cast("string")), F.col(key))
         .limit(n_cells)
     )
-    trained = kmeans_iterate(
-        train, seeds, n_iter=n_iter, vec=vec, key=key, exact_mean=True
+    # kmeans_iterate persists the trained frame itself, so the slot is
+    # released BEFORE it runs (fixtures.py rule 1); the slot then owns
+    # that frame, bounding repeated builds to one cached frame
+    hold("trained")
+    (trained,) = hold(
+        "trained",
+        kmeans_iterate(train, seeds, n_iter=n_iter, vec=vec, key=key, exact_mean=True),
     )
-    # single-live rotation for the trained frame kmeans_iterate left
-    # persisted: repeated builds (bench loops) would otherwise leak
-    # one tiny cached frame per invocation
-    while _TRAINED_CACHE:
-        _TRAINED_CACHE.pop().unpersist()
-    _TRAINED_CACHE.append(trained)
     return (
         trained.select(
             F.col("centroid_id").alias(key), F.col("embedding").alias(vec)

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dwh_spark.fixtures import hold, memo, scratch_dir
 from dwh_spark.functions import text as T
 from dwh_spark.operators import dedup as D
 from dwh_spark.plans.registry import query
@@ -174,21 +175,19 @@ _JACCARD_PAIRS_SQL = f"""
 # cheaper join by ~2× and the one you'd run at 100 TB; the string
 # variant stays pinned equal in tests/test_properties.py and by
 # docs_jaccard_pairs' string-shingle oracle.
-_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _jaccard_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _PAIRS_CACHE:
-        # explicit 32-way spread: the fixture parquet is a single
-        # row-group (one input split), which would serialize the
-        # shingle explode + md5 on one core; the pinned count also
-        # stops AQE re-coalescing the bytes-small exchange
-        _PAIRS_CACHE[key] = D.jaccard_pairs_hashed(
+    # explicit 32-way spread: the fixture parquet is a single
+    # row-group (one input split), which would serialize the
+    # shingle explode + md5 on one core; the pinned count also
+    # stops AQE re-coalescing the bytes-small exchange
+    return memo(
+        spark,
+        ("jaccard_pairs", sf_dir),
+        lambda: D.jaccard_pairs_hashed(
             load_table(spark, sf_dir, "documents").repartition(32, "doc_id"),
             threshold=0.7,
-        ).cache()
-    return _PAIRS_CACHE[key]
+        ).cache(),
+    )
 
 
 @query("docs_jaccard_pairs", oracle=_JACCARD_PAIRS_SQL)
@@ -1518,15 +1517,6 @@ def _corpus_build_oracle() -> str:
     """
 
 
-# at most one live persisted survivors-embeddings frame (same
-# single-live-cache rotation as plans/events.py:_STALEST_CACHE): the
-# semantic stage reads sem_base from multiple eager jobs (count, seed
-# top-k, Lloyd assignment/means) plus several subtrees of the final
-# plan — persisting is both a speed and (for nondeterministic inputs)
-# a correctness requirement, per operators/ranks.py's NOTE.
-_CORPUS_SEM_CACHE: list = []
-
-
 @query("docs_corpus_build", oracle=_corpus_build_oracle())
 def docs_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The end-to-end corpus build — quality filter → exact-dedup
@@ -1569,15 +1559,15 @@ def docs_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the final anti-join branch (~1.5-2 s/run at sf0.1); at 100 TB
     # the materialized survivor set feeding multiple downstream stages
     # is the production shape anyway
-    survivors = D.keep_canonical(kept).persist()
-    sem_base = (
-        load_table(spark, sf_dir, "embeddings")
-        .join(survivors.select(F.col("doc_id").alias("vec_id")), "vec_id", "semi")
-        .persist()
+    survivors = D.keep_canonical(kept)
+    sem_base = load_table(spark, sf_dir, "embeddings").join(
+        survivors.select(F.col("doc_id").alias("vec_id")), "vec_id", "semi"
     )
-    while _CORPUS_SEM_CACHE:
-        _CORPUS_SEM_CACHE.pop().unpersist()
-    _CORPUS_SEM_CACHE.extend([survivors, sem_base])
+    # the semantic stage reads sem_base from multiple eager jobs (count,
+    # seed top-k, Lloyd assignment/means) plus several subtrees of the
+    # final plan — persisting is both a speed and (for nondeterministic
+    # inputs) a correctness requirement, per operators/ranks.py's NOTE
+    survivors, sem_base = hold("corpus_sem", survivors, sem_base)
     centroids, _ = train_semantic_cells(sem_base, rows_per_cell=64, n_iter=1)
     sem_pruned = (
         semantic_prune(sem_base, centroids, threshold=0.3)
@@ -2899,7 +2889,6 @@ def docs_containment_window_ledger(spark: SparkSession, sf_dir: str) -> DataFram
     O(forgotten)+O(expired) partial aggregates, two bounded stats
     merges, and the compaction the store was due anyway."""
     import os
-    import tempfile
 
     from pyspark.sql.window import Window
 
@@ -2926,7 +2915,7 @@ def docs_containment_window_ledger(spark: SparkSession, sf_dir: str) -> DataFram
         .localCheckpoint()
     )
 
-    root = tempfile.mkdtemp(prefix="dwh_ct_window_")
+    root = scratch_dir("ct_window_")
     index_store = ParquetAppendLog(os.path.join(root, "index"), write_partitions=1)
     stats_store = ParquetAppendLog(os.path.join(root, "stats"), write_partitions=1)
     # pooled staging over the one checkpointed shingling pass
@@ -3049,7 +3038,6 @@ def docs_minhash_two_store_window_ledger(
     two anti-joins (the auditor's pass — skippable mid-stream via
     ``audit_consistency=False``, as the live fold does)."""
     import os
-    import tempfile
 
     from pyspark.sql.window import Window
 
@@ -3070,7 +3058,7 @@ def docs_minhash_two_store_window_ledger(
     )
     texts = docs.join(F.broadcast(bt), "doc_id")
 
-    root = tempfile.mkdtemp(prefix="dwh_mh_twostore_window_")
+    root = scratch_dir("mh_twostore_window_")
     index_store = ParquetAppendLog(os.path.join(root, "bands"), write_partitions=1)
     payload_store = ParquetAppendLog(os.path.join(root, "docs"), write_partitions=1)
     # pooled staging (ingest.py:append_batches); commit order keeps

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dwh_spark.fixtures import scratch_dir
 from dwh_spark.operators.similarity import (
     assign_cells,
     cosine_near_duplicates,
@@ -1205,7 +1206,6 @@ def emb_semantic_retrain_compaction(spark: SparkSession, sf_dir: str) -> DataFra
     delete -> reprocess); here the rebuild is scoped to the trained
     aggregate and its dependent column, never the raw data."""
     import os
-    import tempfile
 
     from dwh_spark.operators.forget import forget_rows
     from dwh_spark.operators.similarity import train_semantic_cells
@@ -1214,7 +1214,7 @@ def emb_semantic_retrain_compaction(spark: SparkSession, sf_dir: str) -> DataFra
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     old_cents, _ = train_semantic_cells(emb, rows_per_cell=64)
-    root = tempfile.mkdtemp(prefix="dwh_retrain_")
+    root = scratch_dir("retrain_")
     store = ParquetAppendLog(os.path.join(root, "index"), write_partitions=1)
     store.append(assign_cells(emb, old_cents), 0)
     fids = emb.filter(F.col("vec_id") % 10 == 3).select("vec_id")
@@ -1425,14 +1425,13 @@ def emb_pq_forget_recode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dwh_spark.streaming.emb_ingest import pq_recode_at_compaction
     from dwh_spark.streaming.ingest import ParquetAppendLog
     import os
-    import tempfile
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     day0_seeds = (
         emb.orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id").limit(8)
     )
     store = ParquetAppendLog(
-        os.path.join(tempfile.mkdtemp(prefix="dwh_pq_recode_"), "codes"),
+        os.path.join(scratch_dir("pq_recode_"), "codes"),
         write_partitions=1,
     )
     store.append(pq_encode(emb, pq_codebook(day0_seeds)), 0)
@@ -1567,7 +1566,6 @@ def emb_maintenance_window_ledger(spark: SparkSession, sf_dir: str) -> DataFrame
     half-windows == one union window) is pinned in
     tests/test_maintenance_window.py."""
     import os
-    import tempfile
 
     from pyspark.sql.window import Window
 
@@ -1588,7 +1586,7 @@ def emb_maintenance_window_ledger(spark: SparkSession, sf_dir: str) -> DataFrame
         .localCheckpoint()
     )
     store = ParquetAppendLog(
-        os.path.join(tempfile.mkdtemp(prefix="dwh_maint_win_"), "index"),
+        os.path.join(scratch_dir("maint_win_"), "index"),
         write_partitions=1,
     )
     append_batches(

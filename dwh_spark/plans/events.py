@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from dwh_spark.fixtures import hold, memo, scratch_dir
 from dwh_spark.operators.latest_state import latest_state
 from dwh_spark.plans.registry import query
 from dwh_spark.sources.catalog import load_table
@@ -60,9 +61,6 @@ def events_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Stalest top-k (D6, x/mongoDaemon/service.go:100-103): select the 20%
 # least-recently-active users, oldest first — the refresh scheduler.
 # ---------------------------------------------------------------------------
-_STALEST_CACHE: list = []  # at most one live persisted aggregate
-
-
 @query(
     "events_stalest_topk",
     oracle="""
@@ -95,17 +93,9 @@ def events_stalest_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist the per-user aggregate (n_users rows — the COMPACTED
     # frame, tiny next to events) so the operator's two eager passes +
     # the final job don't re-shuffle the fact table three times. The
-    # lazy result still references it, so it can't unpersist before
-    # returning — instead each construction releases the PREVIOUS
-    # call's cache, bounding the session to one live entry. SINGLE-LIVE
-    # -CACHE ASSUMPTION (fine for the one-query-at-a-time driver/bench
-    # loop, not thread-safe): a still-lazy frame kept from an EARLIER
-    # construction silently degrades to recompute-per-job once its
-    # cache is released here.
-    last_seen = last_seen.persist()
-    while _STALEST_CACHE:
-        _STALEST_CACHE.pop().unpersist()
-    _STALEST_CACHE.append(last_seen)
+    # lazy result still references it, so it is released at the next
+    # construction's hold, not here.
+    (last_seen,) = hold("events_stalest", last_seen)
     meta: dict = {}
     ranked = with_global_rank(
         last_seen, "last_ts", [F.asc("last_ts"), F.asc("user_id")], meta_out=meta
@@ -767,19 +757,14 @@ def events_rolling_7d_actives(spark: SparkSession, sf_dir: str) -> DataFrame:
 # and small-file compaction (the other half of the bucketed-join
 # story in plans/relational.py).
 # ---------------------------------------------------------------------------
-_LAYOUT_CACHE: dict[tuple[str, str], str] = {}
-
-
 def _partitioned_events(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _LAYOUT_CACHE:
-        import tempfile
-
-        path = tempfile.mkdtemp(prefix="events_by_day_") + "/data"
+    def build() -> str:
+        path = scratch_dir("events_by_day_") + "/data"
         ev = load_table(spark, sf_dir, "events").withColumn("day", F.to_date("ts"))
         ev.write.partitionBy("day").mode("overwrite").parquet(path)
-        _LAYOUT_CACHE[key] = path
-    return _LAYOUT_CACHE[key]
+        return path
+
+    return memo(spark, ("events_by_day", sf_dir), build)
 
 
 @query(
@@ -827,12 +812,11 @@ def events_compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming sink needs — footer/open overhead, not data, dominates
     reads once files shrink below ~10 MB."""
     import os
-    import tempfile
 
     from dwh_spark.sources.sinks import compact_small_files
 
     ev = load_table(spark, sf_dir, "events")
-    root = tempfile.mkdtemp(prefix="compact_")
+    root = scratch_dir("compact_")
     small, compacted = f"{root}/small", f"{root}/compacted"
     ev.repartition(64).write.parquet(small)
 

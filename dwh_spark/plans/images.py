@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dwh_spark.fixtures import hold
 from dwh_spark.multimodal.images import (
     decode_and_resize,
     dedup_against_store,
@@ -1223,15 +1224,10 @@ def _imgs_feature_frame(imgs: DataFrame) -> DataFrame:
     )
 
 
-# live persisted feature frames (same rotation discipline as
-# documents.py:_CORPUS_SEM_CACHE): the slim (id, md5, ok, dhash,
-# contrast) frame feeds four downstream consumers — re-decoding the
-# corpus per consumer would quadruple the only expensive stage.
-# Rotation order: the OLD entry is popped and unpersisted BEFORE the
-# new frame is persisted, so consecutive same-session runs never
-# overlap fill-and-evict (the ~2x second-run artifact, VERDICT r13
-# What's-wrong #4)
-_IMGS_CORPUS_CACHE: list = []
+# The slim (id, md5, ok, dhash, contrast) feature frame feeds four
+# downstream consumers — re-decoding the corpus per consumer would
+# quadruple the only expensive stage — so every imgs query persists
+# its decoded frames in the one "imgs_corpus" slot (fixtures.hold).
 
 _IMGS_CORPUS_BUILD_ORACLE = """
 WITH ids AS (
@@ -1352,10 +1348,7 @@ def imgs_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
         .repartition(32)
     )
-    while _IMGS_CORPUS_CACHE:
-        _IMGS_CORPUS_CACHE.pop().unpersist()
-    feats = _imgs_feature_frame(_imgs_corpus_fixture(docs)).persist()
-    _IMGS_CORPUS_CACHE.append(feats)
+    (feats,) = hold("imgs_corpus", _imgs_feature_frame(_imgs_corpus_fixture(docs)))
 
     qual = feats.filter(F.col("ok") & (F.col("contrast") > 0))
     canon = qual.groupBy("bmd5").agg(F.min("image_id").alias("image_id"))
@@ -1507,15 +1500,13 @@ def imgs_corpus_ingest_triage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
         .repartition(32)
     )
-    while _IMGS_CORPUS_CACHE:
-        _IMGS_CORPUS_CACHE.pop().unpersist()
     corpus_feats = _imgs_feature_frame(
         _imgs_corpus_fixture(docs, base=True, variants=False)
-    ).persist()
+    )
     batch_feats = _imgs_feature_frame(
         _imgs_corpus_fixture(docs, base=False, variants=True)
-    ).persist()
-    _IMGS_CORPUS_CACHE.extend([corpus_feats, batch_feats])
+    )
+    corpus_feats, batch_feats = hold("imgs_corpus", corpus_feats, batch_feats)
 
     qual = batch_feats.filter(F.col("ok") & (F.col("contrast") > 0))
     # exact probe: batch hash set BROADCAST into the streamed corpus
@@ -1711,12 +1702,10 @@ def imgs_phash_capped_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the fingerprint frame feeds BOTH the stats build and the probe —
     # persist so the image corpus is decoded once, not twice (ADVICE
     # r13; same rotation discipline as the corpus builds above)
-    while _IMGS_CORPUS_CACHE:
-        _IMGS_CORPUS_CACHE.pop().unpersist()
     index = dhash_frame(
         _imgs_flat_phash_fixture(docs, base=True, variants=False)
-    ).persist()
-    _IMGS_CORPUS_CACHE.append(index)
+    )
+    (index,) = hold("imgs_corpus", index)
     stats = simhash_block_df(
         index.select("image_id", F.col("dhash").alias("simhash")),
         n_blocks=4,
@@ -1871,7 +1860,7 @@ def imgs_phash_forget_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
       survivor-corpus oracle cannot have.
 
     One decode pass feeds the stats build, the forget split (semi +
-    anti), both arms (persist-rotation discipline, pop-before-persist).
+    anti), both arms (held in the "imgs_corpus" slot).
     Durability note as the twins: the same anti-join runs as
     ``ParquetAppendLog.compact(transform=...)``."""
     from dwh_spark.multimodal.perceptual import DHASH_BITS, dhash_frame
@@ -1887,14 +1876,11 @@ def imgs_phash_forget_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
         .repartition(32)
     )
-    while _IMGS_CORPUS_CACHE:
-        _IMGS_CORPUS_CACHE.pop().unpersist()
     sh = (
         dhash_frame(_imgs_forget_fixture(docs, base=True, variants=True))
         .select("image_id", F.col("dhash").alias("simhash"))
-        .persist()
     )
-    _IMGS_CORPUS_CACHE.append(sh)
+    (sh,) = hold("imgs_corpus", sh)
     n_blocks = 4
     block_bits = DHASH_BITS // n_blocks
     stats = simhash_block_df(sh, n_blocks=n_blocks, block_bits=block_bits)

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dwh_spark.fixtures import memo, scratch_dir
 from dwh_spark.functions.coins import coin_amount, coin_denom
 from dwh_spark.operators.transitions import (
     materialize_auction_bids,
@@ -94,45 +95,25 @@ def marketplace_nfts_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 # One stream drain per session serves every marketplace_stream_* query
 # — mirrors the reference, where one continuous indexer feeds all state
 # tables.
-_STREAM_STORES: dict[str, tuple] = {}
+def _stream_state(spark: SparkSession) -> dict:
+    return memo(spark, ("marketplace_stream",), lambda: _drain_stream(spark))
 
 
-def _stream_state(spark: SparkSession):
-    key = spark.sparkContext.applicationId
-    if key in _STREAM_STORES:
-        return _STREAM_STORES[key]
+def _drain_stream(spark: SparkSession) -> dict:
     import os
-    import shutil
     import sys
-    import tempfile
     import time
 
-    from pyspark.sql.window import Window
-
+    from dwh_spark.plans.streaming import _stage_ntile_slices
     from dwh_spark.streaming.ingest import ParquetStateStore, stream_events
     from dwh_spark.streaming.marketplace import run_marketplace_stream
 
     t0 = time.perf_counter()
     events = marketplace_events(spark)
-    root = tempfile.mkdtemp(prefix="mkt_stream_")
-    input_dir = os.path.join(root, "input")
-    os.makedirs(input_dir)
+    root = scratch_dir("mkt_stream_")
     # stage 4 chain-ordered slices; mtimes make the file-source cursor
-    # deliver them in chain order (the reference's LevelDB cursor).
-    # ONE partitionBy write (not 4 filtered jobs): the fixture is tiny,
-    # so staging cost is pure per-job overhead — and each filtered job
-    # re-ran the ntile window from scratch.
-    sliced = events.withColumn(
-        "__slice", F.ntile(4).over(Window.orderBy("height", "tx_index", "msg_id"))
-    )
-    tmp = os.path.join(root, "staged")
-    sliced.repartition(1).write.partitionBy("__slice").parquet(tmp)
-    for i in range(1, 5):
-        sdir = os.path.join(tmp, f"__slice={i}")
-        part = next(f for f in os.listdir(sdir) if f.endswith(".parquet"))
-        dst = os.path.join(input_dir, f"batch{i}.parquet")
-        shutil.move(os.path.join(sdir, part), dst)
-        os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
+    # deliver them in chain order (the reference's LevelDB cursor)
+    input_dir = _stage_ntile_slices(events, 4, "height", "tx_index", "msg_id")
     t_stage = time.perf_counter()
     # 2 files per trigger → 2 micro-batches: still exercises the
     # cross-batch merge + carried makes state at half the per-batch
@@ -162,8 +143,7 @@ def _stream_state(spark: SparkSession):
         f"drain(2 micro-batches x 6 stores) {t_drain - t_stage:.2f}s",
         file=sys.stderr,
     )
-    _STREAM_STORES[key] = stores
-    return _STREAM_STORES[key]
+    return stores
 
 
 @query("marketplace_stream_nfts_state", oracle=_NFTS_STATE_ORACLE)

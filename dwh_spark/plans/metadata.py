@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from dwh_spark.fixtures import memo
 from dwh_spark.operators.metadata import (
     extract_field,
     is_valid_erc721,
@@ -132,16 +133,12 @@ def metadata_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # priority queries — cache it per (session, sf_dir) like the
 # materialized state table it models (recompute would re-parse JSON
 # and re-join per query).
-_STATE_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _merged_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cache_key = (spark.sparkContext.applicationId, sf_dir)
-    if cache_key in _STATE_CACHE:
-        return _STATE_CACHE[cache_key]
-    merged = _merged_state_uncached(spark, sf_dir).cache()
-    _STATE_CACHE[cache_key] = merged
-    return merged
+    return memo(
+        spark,
+        ("merged_state", sf_dir),
+        lambda: _merged_state_uncached(spark, sf_dir).cache(),
+    )
 
 
 def _merged_state_uncached(spark: SparkSession, sf_dir: str) -> DataFrame:

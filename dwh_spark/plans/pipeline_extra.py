@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from dwh_spark.fixtures import memo, scratch_dir
 from dwh_spark.plans.registry import query
 from dwh_spark.sources.catalog import load_table
 
@@ -848,7 +849,6 @@ def nation_trade_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The reference's Postgres surface is exactly this path with a
 # different URL; Derby-in-process is what a sandbox can verify.
 # ---------------------------------------------------------------------------
-_DERBY_DIR_CACHE: dict = {}
 
 
 @query(
@@ -860,8 +860,6 @@ _DERBY_DIR_CACHE: dict = {}
     """,
 )
 def orders_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from dwh_spark.sources.sinks import write_jdbc
 
     agg = (
@@ -872,13 +870,11 @@ def orders_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(_dec("o_totalprice")).cast("double").alias("total_price"),
         )
     )
-    # One Derby database per (application, sf_dir) — a fresh mkdtemp per
+    # One Derby database per (session, sf_dir) — a fresh dir per
     # invocation would accumulate booted embedded databases (driver
     # memory + file handles) across repeated bench rounds in one session
-    cache_key = (spark.sparkContext.applicationId, sf_dir)
-    if cache_key not in _DERBY_DIR_CACHE:
-        _DERBY_DIR_CACHE[cache_key] = tempfile.mkdtemp(prefix="dwh_jdbc_")
-    url = f"jdbc:derby:{_DERBY_DIR_CACHE[cache_key]}/db;create=true"
+    derby_dir = memo(spark, ("derby_dir", sf_dir), lambda: scratch_dir("jdbc_"))
+    url = f"jdbc:derby:{derby_dir}/db;create=true"
     driver = "org.apache.derby.jdbc.EmbeddedDriver"
     # tiny aggregate → one connection; a fact-sized write would
     # repartition to the sink's connection budget first (sinks.py note)
@@ -1511,7 +1507,6 @@ def orders_bloom_prejoin_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 # on the original table — a lossy serializer (double formatting,
 # timestamp zone drift, header confusion) breaks the hash.
 # ---------------------------------------------------------------------------
-_FORMAT_DIR_CACHE: dict[tuple[str, str], str] = {}
 
 
 @query(
@@ -1533,17 +1528,16 @@ def orders_multiformat_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     back through the real parser; the aggregates (exact decimal sum,
     key range, min timestamp rendered as a string) pin value fidelity
     per format against the original parquet."""
-    import tempfile
-
     orders = load_table(spark, sf_dir, "orders")
-    cache_key = (spark.sparkContext.applicationId, sf_dir)
-    if cache_key not in _FORMAT_DIR_CACHE:
-        base = tempfile.mkdtemp(prefix="dwh_formats_")
+
+    def build() -> str:
+        base = scratch_dir("formats_")
         orders.write.mode("overwrite").orc(f"{base}/orc")
         orders.write.mode("overwrite").option("header", True).csv(f"{base}/csv")
         orders.write.mode("overwrite").json(f"{base}/json")
-        _FORMAT_DIR_CACHE[cache_key] = base
-    base = _FORMAT_DIR_CACHE[cache_key]
+        return base
+
+    base = memo(spark, ("format_dirs", sf_dir), build)
     schema = orders.schema
     frames = {
         "orc": spark.read.orc(f"{base}/orc"),
@@ -1574,7 +1568,6 @@ def orders_multiformat_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # fail or misalign — Spark's mergeSchema union. Staged once per
 # session like the other format fixtures.
 # ---------------------------------------------------------------------------
-_EVOLVE_DIR_CACHE: dict[tuple[str, str], str] = {}
 
 
 @query(
@@ -1601,12 +1594,10 @@ def orders_schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     routing, null-widening, and value fidelity per batch. At 100 TB
     this is the everyday lake migration path: no rewrite of old files,
     the reader widens."""
-    import tempfile
-
     orders = load_table(spark, sf_dir, "orders")
-    cache_key = (spark.sparkContext.applicationId, sf_dir)
-    if cache_key not in _EVOLVE_DIR_CACHE:
-        base = tempfile.mkdtemp(prefix="dwh_evolve_")
+
+    def build() -> str:
+        base = scratch_dir("evolve_")
         v1 = orders.filter(F.col("o_orderkey") % 2 == 0)
         v2 = orders.filter(F.col("o_orderkey") % 2 == 1).withColumn(
             "channel",
@@ -1614,8 +1605,9 @@ def orders_schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         v1.write.mode("overwrite").parquet(f"{base}/data")
         v2.write.mode("append").parquet(f"{base}/data")
-        _EVOLVE_DIR_CACHE[cache_key] = base
-    base = _EVOLVE_DIR_CACHE[cache_key]
+        return base
+
+    base = memo(spark, ("evolve_dir", sf_dir), build)
     merged = spark.read.option("mergeSchema", True).parquet(f"{base}/data")
     return merged.groupBy(
         F.when(F.col("channel").isNull(), "v1").otherwise("v2").alias("batch")
@@ -1734,14 +1726,13 @@ def mixed_ingest_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     triage (operators/dedup.py:corpus_ingest_triage for docs; the
     imgs/audio/video triage pipelines for the binary modalities).
     Each modality's per-item frame is localCheckpoint-ed as soon as
-    it is built: the AV triages keep their fixtures in the KEYED
-    persist-rotation cache (plans/av.py:_AV_CORPUS_CACHE, one slot
-    per family since r19, so audio and video materialize
-    concurrently) — and the checkpoint also means the expensive
-    decodes feed the ledger exactly once. Global ids are local ids shifted into disjoint
-    1e8 bands (``_MIXED_OFFSETS``) — the cross-family id discipline
-    a real mixed-corpus ingest needs pinned before anything joins
-    across modalities."""
+    it is built: the AV triages keep their fixtures in one rotation
+    slot per family (fixtures.hold; "av_audio", "av_video"), so audio
+    and video materialize concurrently — and the checkpoint also means
+    the expensive decodes feed the ledger exactly once. Global ids are
+    local ids shifted into disjoint 1e8 bands (``_MIXED_OFFSETS``) —
+    the cross-family id discipline a real mixed-corpus ingest needs
+    pinned before anything joins across modalities."""
     from dwh_spark.functions import text as T
     from dwh_spark.operators import dedup as D
     from dwh_spark.plans.av import (
@@ -1770,15 +1761,11 @@ def mixed_ingest_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).localCheckpoint()
 
     # The four modality triages are INDEPENDENT jobs (disjoint inputs,
-    # disjoint module caches), so their localCheckpoint
+    # disjoint rotation slots), so their localCheckpoint
     # materializations run from a small thread pool — each family's
     # tail stragglers back-fill with the next family's tasks instead
     # of idling the cluster (the marketplace fold's pooled-commit
-    # discipline applied to the capstone). Since r19 the AV persist
-    # rotation is KEYED per family (plans/av.py:_drop_av_slot), so
-    # audio and video no longer rotate each other's fixture out and
-    # all four arms run concurrently — the AV chain was the pool's
-    # critical path (audio + video back-to-back in one worker).
+    # discipline applied to the capstone).
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=4) as pool:
@@ -2001,9 +1988,8 @@ def pipeline_unified_erasure_ledger(
     artifact proving both deletion (zero ghosts) and non-collateral
     (survivors untouched). Each family's tiny aggregate is
     localCheckpoint-ed and all five families materialize from a
-    small thread pool — the AV probes keep their fixtures in the
-    KEYED persist-rotation cache (plans/av.py: _AV_CAPPED_CACHE, one
-    slot per family since r19), exactly the discipline
+    small thread pool — the AV probes keep their fixtures in one
+    rotation slot per family, exactly the discipline
     mixed_ingest_manifest documents."""
     from dwh_spark.plans.av import (
         av_audio_offset_forget_probe,
@@ -2118,10 +2104,9 @@ def pipeline_unified_erasure_ledger(
         )
 
     # The five family probes are INDEPENDENT jobs (disjoint forget
-    # stores, disjoint module caches: imgs rotates _IMGS_CORPUS_CACHE,
-    # docs/emb build fresh tempdirs, and since r19 the AV persist
-    # rotation is KEYED per family so audio and video no longer
-    # rotate each other's fixture out) — materialize all five from a
+    # stores and rotation slots: imgs holds "imgs_corpus", audio and
+    # video one slot each, docs/emb build fresh scratch dirs) —
+    # materialize all five from a
     # small thread pool so each family's tail back-fills with the
     # next family's tasks (the mixed_ingest_manifest pool applied to
     # the erasure capstone; guide §2.6 — this was the one capstone

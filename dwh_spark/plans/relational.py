@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from dwh_spark.fixtures import memo, scratch_dir
 from dwh_spark.plans.registry import query
 from dwh_spark.sources.catalog import load_table
 
@@ -633,33 +634,28 @@ def sql_correlated_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Tables are bucketed once per session into a temp warehouse; the
 # driver-facing parquet stays untouched.
 # ---------------------------------------------------------------------------
-_BUCKETED_CACHE: dict[tuple[str, str], tuple[str, str]] = {}
-
-
 def _bucketed_pair(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _BUCKETED_CACHE:
-        return _BUCKETED_CACHE[key]
-    import tempfile
     import uuid
 
     from dwh_spark.sources.sinks import write_bucketed
 
-    root = tempfile.mkdtemp(prefix="bucketed_")
-    uid = uuid.uuid4().hex[:8]
-    ot, ct = f"orders_b_{uid}", f"customer_b_{uid}"
-    write_bucketed(
-        load_table(spark, sf_dir, "orders"), ot,
-        bucket_by=["o_custkey"], n_buckets=16, sort_by=["o_custkey"],
-        path=f"{root}/orders",
-    )
-    write_bucketed(
-        load_table(spark, sf_dir, "customer"), ct,
-        bucket_by=["c_custkey"], n_buckets=16, sort_by=["c_custkey"],
-        path=f"{root}/customer",
-    )
-    _BUCKETED_CACHE[key] = (ot, ct)
-    return _BUCKETED_CACHE[key]
+    def build() -> tuple[str, str]:
+        root = scratch_dir("bucketed_")
+        uid = uuid.uuid4().hex[:8]
+        ot, ct = f"orders_b_{uid}", f"customer_b_{uid}"
+        write_bucketed(
+            load_table(spark, sf_dir, "orders"), ot,
+            bucket_by=["o_custkey"], n_buckets=16, sort_by=["o_custkey"],
+            path=f"{root}/orders",
+        )
+        write_bucketed(
+            load_table(spark, sf_dir, "customer"), ct,
+            bucket_by=["c_custkey"], n_buckets=16, sort_by=["c_custkey"],
+            path=f"{root}/customer",
+        )
+        return ot, ct
+
+    return memo(spark, ("bucketed_pair", sf_dir), build)
 
 
 @query(

@@ -10,11 +10,10 @@ history or tails the chain live).
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dwh_spark.fixtures import memo, scratch_dir
 from dwh_spark.plans.registry import query
 from dwh_spark.sources.catalog import load_table
 from dwh_spark.streaming.ingest import (
@@ -28,78 +27,66 @@ from dwh_spark.streaming.ingest import (
 
 _N_FILES = 4  # staged event files → micro-batches per stream run
 
-# One staged copy of the events table serves every streaming query in
-# the process (the stage write is the most expensive fixed cost); each
-# query still gets its own checkpoint/state dirs under a fresh root.
-_STAGE_CACHE: dict[str, str] = {}
-
 
 def _staged_events(
     spark: SparkSession, sf_dir: str, max_files_per_trigger: int = 1
 ) -> tuple[DataFrame, str]:
-    """Stage the events table as a multi-file dir (once per sf_dir) and
-    open it as an ordered file-stream."""
-    if sf_dir not in _STAGE_CACHE:
-        stage_root = tempfile.mkdtemp(prefix="dwh_stream_stage_")
-        _STAGE_CACHE[sf_dir] = stage_stream_input(
-            spark, load_table(spark, sf_dir, "events"), f"{stage_root}/input", _N_FILES
-        )
-    root = tempfile.mkdtemp(prefix="dwh_stream_")
-    return (
-        stream_events(
-            spark, _STAGE_CACHE[sf_dir], max_files_per_trigger=max_files_per_trigger
+    """Stage the events table as a multi-file dir (once per session
+    and sf_dir) and open it as an ordered file-stream."""
+    # one staged copy serves every streaming query (the stage write is
+    # the most expensive fixed cost); each query still gets its own
+    # checkpoint/state dirs under a fresh root
+    staged = memo(
+        spark,
+        ("stream_stage", sf_dir),
+        lambda: stage_stream_input(
+            spark,
+            load_table(spark, sf_dir, "events"),
+            scratch_dir("stream_stage_") + "/input",
+            _N_FILES,
         ),
-        root,
     )
+    stream = stream_events(spark, staged, max_files_per_trigger=max_files_per_trigger)
+    return stream, scratch_dir("stream_")
 
 
-# INPUT-staging memo (disclosed, same pattern as _STAGE_CACHE above):
-# the staged micro-batch files are a pure function of the DETERMINISTIC
-# input frame (all callers stage md5/arithmetic-synthesized fixtures or
-# raw table projections — no rand()), every consumer only READS them
-# (stores/checkpoints stay per-query under each query's own root), and
-# hits are matched by Catalyst's sameSemantics on the analyzed plan —
-# never by name — so a frame that differs in ANY expression stages
-# fresh. Never caches results: each fold still computes from these
+# The ntile stage is memoized per semantically identical input frame:
+# the staged files are a pure function of the DETERMINISTIC input frame
+# (all callers stage md5/arithmetic-synthesized fixtures or raw table
+# projections — no rand()) and every consumer only READS them
+# (stores/checkpoints stay per-query under each query's own root).
+# Results are never memoized: each fold still computes from these
 # parquet inputs every invocation.
-_NTILE_STAGE_CACHE: list[tuple[DataFrame, int, str, str]] = []
-
-
-def _stage_ntile_slices(df: DataFrame, root: str, n: int, order_col: str) -> str:
+def _stage_ntile_slices(df: DataFrame, n: int, *order_cols: str) -> str:
     """Stage ``df`` as ``n`` ORDERED micro-batch files — one ntile
-    slice over ``order_col`` per file, mtimes making the file source
+    slice over ``order_cols`` per file, mtimes making the file source
     deliver them in slice order. For the gates whose oracles re-derive
     exact batch boundaries via the same ntile (the `_staged_events`
-    cache can't serve those: its split is partition-hash, not
-    key-ordered). Returns the input dir — memoized per semantically
-    identical input frame (see _NTILE_STAGE_CACHE), so the dir may
-    outlive ``root``."""
+    stage can't serve those: its split is partition-hash, not
+    key-ordered). Returns the input dir."""
     import os
     import shutil
-    import tempfile as _tempfile
 
     from pyspark.sql.window import Window
 
-    for c_df, c_n, c_col, c_dir in _NTILE_STAGE_CACHE:
-        if c_n == n and c_col == order_col and df.sameSemantics(c_df):
-            return c_dir
+    def build() -> str:
+        stage_root = scratch_dir("ntile_stage_")
+        input_dir = os.path.join(stage_root, "input")
+        os.makedirs(input_dir)
+        sliced = df.withColumn(
+            "__slice", F.ntile(n).over(Window.orderBy(*order_cols))
+        )
+        tmp = os.path.join(stage_root, "staged")
+        sliced.repartition(1).write.partitionBy("__slice").parquet(tmp)
+        for i in range(1, n + 1):
+            sdir = os.path.join(tmp, f"__slice={i}")
+            part = next(f for f in os.listdir(sdir) if f.endswith(".parquet"))
+            dst = os.path.join(input_dir, f"batch{i}.parquet")
+            shutil.move(os.path.join(sdir, part), dst)
+            os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
+        return input_dir
 
-    stage_root = _tempfile.mkdtemp(prefix="dwh_ntile_stage_")
-    input_dir = os.path.join(stage_root, "input")
-    os.makedirs(input_dir)
-    sliced = df.withColumn(
-        "__slice", F.ntile(n).over(Window.orderBy(order_col))
-    )
-    tmp = os.path.join(stage_root, "staged")
-    sliced.repartition(1).write.partitionBy("__slice").parquet(tmp)
-    for i in range(1, n + 1):
-        sdir = os.path.join(tmp, f"__slice={i}")
-        part = next(f for f in os.listdir(sdir) if f.endswith(".parquet"))
-        dst = os.path.join(input_dir, f"batch{i}.parquet")
-        shutil.move(os.path.join(sdir, part), dst)
-        os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-    _NTILE_STAGE_CACHE.append((df, n, order_col, input_dir))
-    return input_dir
+    return memo(df.sparkSession, ("ntile_stage", n, *order_cols), build, like=df)
 
 
 @query(
@@ -296,8 +283,8 @@ def streaming_rollup_asof_snapshot(spark: SparkSession, sf_dir: str) -> DataFram
     from dwh_spark.streaming.ingest import run_incremental_rollup
 
     events = load_table(spark, sf_dir, "events")
-    root = tempfile.mkdtemp(prefix="dwh_rollup_asof_")
-    input_dir = _stage_ntile_slices(events, root, 3, "event_id")
+    root = scratch_dir("rollup_asof_")
+    input_dir = _stage_ntile_slices(events, 3, "event_id")
 
     stream = (
         spark.readStream.schema(events.schema)
@@ -374,8 +361,8 @@ def streaming_rollup_version_gc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     events = load_table(spark, sf_dir, "events")
-    root = tempfile.mkdtemp(prefix="dwh_rollup_gc_")
-    input_dir = _stage_ntile_slices(events, root, 3, "event_id")
+    root = scratch_dir("rollup_gc_")
+    input_dir = _stage_ntile_slices(events, 3, "event_id")
 
     stream = (
         spark.readStream.schema(events.schema)
@@ -461,8 +448,8 @@ def streaming_rollup_version_delta(spark: SparkSession, sf_dir: str) -> DataFram
     from dwh_spark.streaming.ingest import run_incremental_rollup
 
     events = load_table(spark, sf_dir, "events")
-    root = tempfile.mkdtemp(prefix="dwh_rollup_delta_")
-    input_dir = _stage_ntile_slices(events, root, 3, "event_id")
+    root = scratch_dir("rollup_delta_")
+    input_dir = _stage_ntile_slices(events, 3, "event_id")
 
     stream = (
         spark.readStream.schema(events.schema)
@@ -524,8 +511,8 @@ def streaming_state_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dwh_spark.streaming.ingest import run_incremental_rollup
 
     events = load_table(spark, sf_dir, "events")
-    root = tempfile.mkdtemp(prefix="dwh_state_lookup_")
-    input_dir = _stage_ntile_slices(events, root, 3, "event_id")
+    root = scratch_dir("state_lookup_")
+    input_dir = _stage_ntile_slices(events, 3, "event_id")
 
     stream = (
         spark.readStream.schema(events.schema)
@@ -577,7 +564,7 @@ def streaming_dedup_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output must equal the batch distinct count of the un-duplicated
     table."""
     events = load_table(spark, sf_dir, "events")
-    root = tempfile.mkdtemp(prefix="dwh_dedup_")
+    root = scratch_dir("dedup_")
     # two staged copies → the same event_id arrives in two batches
     doubled = events.unionByName(events)
     stage_stream_input(spark, doubled.repartition(4), f"{root}/input", 4)
@@ -784,9 +771,6 @@ def streaming_dim_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.table(name).select("nation", "n_events", "sum_value")
 
 
-_LEFTJOIN_STAGE_CACHE: dict[str, str] = {}
-
-
 @query(
     "streaming_click_purchase_left_join",
     oracle="""
@@ -833,14 +817,14 @@ def streaming_click_purchase_left_join(spark: SparkSession, sf_dir: str) -> Data
 
     t_start = _time.perf_counter()
     events = load_table(spark, sf_dir, "events")
-    if sf_dir not in _LEFTJOIN_STAGE_CACHE:
-        stage = tempfile.mkdtemp(prefix="dwh_stream_lj_") + "/input"
+    def stage() -> str:
+        path = scratch_dir("stream_lj_") + "/input"
         # stage only the 4 columns the join reads — the staged dir is
         # harness scaffolding for an ordered file log, and dropping
         # value/props halves the write and every micro-batch scan
         events.select("event_id", "ts", "user_id", "event_type").repartition(
             6
-        ).write.mode("overwrite").parquet(stage)
+        ).write.mode("overwrite").parquet(path)
         _time.sleep(0.05)  # strictly newer mtime => sentinel replays last
         # SQL VALUES, not createDataFrame: a python-list local relation
         # parallelizes into defaultParallelism python-RDD partitions,
@@ -855,21 +839,21 @@ def streaming_click_purchase_left_join(spark: SparkSession, sf_dir: str) -> Data
                            (1000000001, '2024-12-30 00:00:00', -2, 'purchase')
                  AS t(event_id, ts, user_id, event_type)"""
         )
-        flush.coalesce(1).write.mode("append").parquet(stage)
-        _LEFTJOIN_STAGE_CACHE[sf_dir] = stage
+        flush.coalesce(1).write.mode("append").parquet(path)
         print(
             f"# click/purchase lj staging: {_time.perf_counter() - t_start:.2f}s",
             file=sys.stderr,
         )
-    root = tempfile.mkdtemp(prefix="dwh_stream_")
+        return path
+
+    staged = memo(spark, ("stream_lj_stage", sf_dir), stage)
+    root = scratch_dir("stream_")
     t_drain = _time.perf_counter()
     # trigger=4 over the 7 staged files → two DATA micro-batches (4
     # files, then 2 + the sentinel) + the no-data flush batch — still
     # a genuinely batched replay, at half the per-batch incremental-
     # planning/state-commit overhead of the old (3,3,1) split.
-    stream = stream_events(
-        spark, _LEFTJOIN_STAGE_CACHE[sf_dir], max_files_per_trigger=4
-    )
+    stream = stream_events(spark, staged, max_files_per_trigger=4)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     # 4 partitions × 4 state stores per batch: measured drain at sf0.1
     # 4.4 s (8 parts, 3 triggers) → 3.0 s (4 parts, 2 triggers),
@@ -998,10 +982,10 @@ def streaming_minhash_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dwh_spark.streaming.docs_ingest import read_ingest_results, run_minhash_ingest
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    root = tempfile.mkdtemp(prefix="dwh_mh_ingest_")
+    root = scratch_dir("mh_ingest_")
     # 3 id-ordered slices, mtime-sequenced (the marketplace staging
     # pattern) so the file-source cursor delivers ascending doc_ids
-    input_dir = _stage_ntile_slices(docs, root, 3, "doc_id")
+    input_dir = _stage_ntile_slices(docs, 3, "doc_id")
 
     from dwh_spark.streaming.ingest import ParquetAppendLog
 
@@ -1141,8 +1125,8 @@ def streaming_minhash_forget_ingest(
             (F.col("doc_id") + 2000000).alias("doc_id"), "text"
         )
     )
-    root = tempfile.mkdtemp(prefix="dwh_mh_forget_ingest_")
-    input_dir = _stage_ntile_slices(docs, root, 3, "doc_id")
+    root = scratch_dir("mh_forget_ingest_")
+    input_dir = _stage_ntile_slices(docs, 3, "doc_id")
 
     bands_store = ParquetAppendLog(os.path.join(root, "bands"), write_partitions=1)
     docs_store = ParquetAppendLog(os.path.join(root, "docs"), write_partitions=1)
@@ -1293,8 +1277,8 @@ def streaming_minhash_ttl_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("doc_id") + 2000000).alias("doc_id"), "text"
         )
     )
-    root = tempfile.mkdtemp(prefix="dwh_mh_ttl_ingest_")
-    input_dir = _stage_ntile_slices(docs, root, 3, "doc_id")
+    root = scratch_dir("mh_ttl_ingest_")
+    input_dir = _stage_ntile_slices(docs, 3, "doc_id")
 
     bands_store = ParquetAppendLog(os.path.join(root, "bands"), write_partitions=1)
     docs_store = ParquetAppendLog(os.path.join(root, "docs"), write_partitions=1)
@@ -1386,8 +1370,8 @@ def streaming_minhash_ttl_compact_ingest(
             (F.col("doc_id") + 2000000).alias("doc_id"), "text"
         )
     )
-    root = tempfile.mkdtemp(prefix="dwh_mh_ttl_cmp_ingest_")
-    input_dir = _stage_ntile_slices(docs, root, 3, "doc_id")
+    root = scratch_dir("mh_ttl_cmp_ingest_")
+    input_dir = _stage_ntile_slices(docs, 3, "doc_id")
 
     bands_store = ParquetAppendLog(os.path.join(root, "bands"), write_partitions=1)
     docs_store = ParquetAppendLog(os.path.join(root, "docs"), write_partitions=1)
@@ -1541,7 +1525,7 @@ def docs_minhash_asof_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("doc_id") + 2000000).alias("doc_id"), "text"
         )
     )
-    root = tempfile.mkdtemp(prefix="dwh_mh_asof_")
+    root = scratch_dir("mh_asof_")
     sliced = docs.withColumn("__slice", F.ntile(3).over(Window.orderBy("doc_id")))
     staged = os.path.join(root, "staged")
     sliced.repartition(1).write.partitionBy("__slice").parquet(staged)
@@ -1718,7 +1702,7 @@ def docs_minhash_delta_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("doc_id") + 2000000).alias("doc_id"), "text"
         )
     )
-    root = tempfile.mkdtemp(prefix="dwh_mh_delta_")
+    root = scratch_dir("mh_delta_")
     sliced = docs.withColumn("__slice", F.ntile(3).over(Window.orderBy("doc_id")))
     staged = os.path.join(root, "staged")
     sliced.repartition(1).write.partitionBy("__slice").parquet(staged)
@@ -1839,8 +1823,8 @@ def streaming_semantic_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dwh_spark.streaming.ingest import ParquetAppendLog
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    root = tempfile.mkdtemp(prefix="dwh_sem_ingest_")
-    input_dir = _stage_ntile_slices(emb, root, 3, "vec_id")
+    root = scratch_dir("sem_ingest_")
+    input_dir = _stage_ntile_slices(emb, 3, "vec_id")
 
     # day-0 centroids: md5-smallest-8 of the FIRST slice (the only
     # data that exists when the stream starts)
@@ -1933,8 +1917,8 @@ def streaming_phash_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id").repartition(32)
     images = _phash_fixture_images(docs, base=True, variants=True)
 
-    root = tempfile.mkdtemp(prefix="dwh_phash_ingest_")
-    input_dir = _stage_ntile_slices(images, root, 3, "image_id")
+    root = scratch_dir("phash_ingest_")
+    input_dir = _stage_ntile_slices(images, 3, "image_id")
 
     index_store = ParquetAppendLog(os.path.join(root, "index"), write_partitions=1)
     out_dir = os.path.join(root, "out")
@@ -2032,8 +2016,8 @@ def streaming_phash_forget_ingest(spark: SparkSession, sf_dir: str) -> DataFrame
         F.col("doc_id").alias("image_id")
     )
 
-    root = tempfile.mkdtemp(prefix="dwh_phash_forget_ingest_")
-    input_dir = _stage_ntile_slices(images, root, 3, "image_id")
+    root = scratch_dir("phash_forget_ingest_")
+    input_dir = _stage_ntile_slices(images, 3, "image_id")
 
     index_store = ParquetAppendLog(os.path.join(root, "index"), write_partitions=1)
     out_dir = os.path.join(root, "out")
@@ -2130,8 +2114,8 @@ def streaming_audio_fp_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id").repartition(32)
     audio = _audio_fp_fixture(docs, base=True, variants=True)
 
-    root = tempfile.mkdtemp(prefix="dwh_audio_fp_ingest_")
-    input_dir = _stage_ntile_slices(audio, root, 3, "audio_id")
+    root = scratch_dir("audio_fp_ingest_")
+    input_dir = _stage_ntile_slices(audio, 3, "audio_id")
 
     index_store = ParquetAppendLog(os.path.join(root, "index"), write_partitions=1)
     out_dir = os.path.join(root, "out")
@@ -2218,8 +2202,8 @@ def streaming_video_phash_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id").repartition(32)
     vids = _video_phash_fixture(docs, base=True, variants=True)
 
-    root = tempfile.mkdtemp(prefix="dwh_video_phash_ingest_")
-    input_dir = _stage_ntile_slices(vids, root, 3, "video_id")
+    root = scratch_dir("video_phash_ingest_")
+    input_dir = _stage_ntile_slices(vids, 3, "video_id")
 
     index_store = ParquetAppendLog(os.path.join(root, "index"), write_partitions=1)
     out_dir = os.path.join(root, "out")
@@ -2315,8 +2299,8 @@ def streaming_audio_offset_ingest(spark: SparkSession, sf_dir: str) -> DataFrame
     docs = load_table(spark, sf_dir, "documents").select("doc_id").repartition(32)
     audio = _audio_offset_fixture(docs, base=True, variants=True)
 
-    root = tempfile.mkdtemp(prefix="dwh_audio_offset_ingest_")
-    input_dir = _stage_ntile_slices(audio, root, 3, "audio_id")
+    root = scratch_dir("audio_offset_ingest_")
+    input_dir = _stage_ntile_slices(audio, 3, "audio_id")
 
     index_store = ParquetAppendLog(os.path.join(root, "index"), write_partitions=1)
     out_dir = os.path.join(root, "out")
@@ -2406,8 +2390,8 @@ def streaming_video_offset_ingest(spark: SparkSession, sf_dir: str) -> DataFrame
     docs = load_table(spark, sf_dir, "documents").select("doc_id").repartition(32)
     vids = _video_offset_fixture(docs, base=True, variants=True)
 
-    root = tempfile.mkdtemp(prefix="dwh_video_offset_ingest_")
-    input_dir = _stage_ntile_slices(vids, root, 3, "video_id")
+    root = scratch_dir("video_offset_ingest_")
+    input_dir = _stage_ntile_slices(vids, 3, "video_id")
 
     index_store = ParquetAppendLog(os.path.join(root, "index"), write_partitions=1)
     out_dir = os.path.join(root, "out")
@@ -2520,8 +2504,8 @@ def streaming_audio_offset_entropy_ingest(
     docs = load_table(spark, sf_dir, "documents").select("doc_id").repartition(32)
     audio = _audio_silence_offset_fixture(docs, base=True, variants=True)
 
-    root = tempfile.mkdtemp(prefix="dwh_audio_offset_entropy_ingest_")
-    input_dir = _stage_ntile_slices(audio, root, 3, "audio_id")
+    root = scratch_dir("audio_offset_entropy_ingest_")
+    input_dir = _stage_ntile_slices(audio, 3, "audio_id")
 
     index_store = ParquetAppendLog(os.path.join(root, "index"), write_partitions=1)
     out_dir = os.path.join(root, "out")
@@ -2693,8 +2677,8 @@ def streaming_audio_offset_cap_compaction(
     docs = load_table(spark, sf_dir, "documents").select("doc_id").repartition(32)
     audio = _audio_jingle_offset_fixture(docs, base=True, variants=True)
 
-    root = tempfile.mkdtemp(prefix="dwh_audio_offset_cap_compaction_")
-    input_dir = _stage_ntile_slices(audio, root, 3, "audio_id")
+    root = scratch_dir("audio_offset_cap_compaction_")
+    input_dir = _stage_ntile_slices(audio, 3, "audio_id")
 
     index_store = ParquetAppendLog(os.path.join(root, "index"), write_partitions=1)
     stats_store = ParquetAppendLog(os.path.join(root, "stats"), write_partitions=1)
@@ -2871,8 +2855,8 @@ def streaming_audio_offset_window_ingest(
     docs = load_table(spark, sf_dir, "documents").select("doc_id").repartition(32)
     audio = _audio_jingle_offset_fixture(docs, base=True, variants=True)
 
-    root = tempfile.mkdtemp(prefix="dwh_audio_offset_window_ingest_")
-    input_dir = _stage_ntile_slices(audio, root, 3, "audio_id")
+    root = scratch_dir("audio_offset_window_ingest_")
+    input_dir = _stage_ntile_slices(audio, 3, "audio_id")
 
     index_store = ParquetAppendLog(os.path.join(root, "index"), write_partitions=1)
     stats_store = ParquetAppendLog(os.path.join(root, "stats"), write_partitions=1)
@@ -3003,8 +2987,8 @@ def streaming_audio_offset_forget_ingest(
         F.col("doc_id").alias("audio_id")
     )
 
-    root = tempfile.mkdtemp(prefix="dwh_audio_offset_forget_ingest_")
-    input_dir = _stage_ntile_slices(audio, root, 3, "audio_id")
+    root = scratch_dir("audio_offset_forget_ingest_")
+    input_dir = _stage_ntile_slices(audio, 3, "audio_id")
 
     index_store = ParquetAppendLog(os.path.join(root, "index"), write_partitions=1)
     out_dir = os.path.join(root, "out")
@@ -3131,8 +3115,8 @@ def streaming_video_offset_forget_ingest(
         F.col("doc_id").alias("video_id")
     )
 
-    root = tempfile.mkdtemp(prefix="dwh_video_offset_forget_ingest_")
-    input_dir = _stage_ntile_slices(vids, root, 3, "video_id")
+    root = scratch_dir("video_offset_forget_ingest_")
+    input_dir = _stage_ntile_slices(vids, 3, "video_id")
 
     index_store = ParquetAppendLog(os.path.join(root, "index"), write_partitions=1)
     out_dir = os.path.join(root, "out")
@@ -3295,8 +3279,8 @@ def streaming_video_offset_cap_compaction(
     )
     vids = _video_title_offset_fixture(docs, base=True, variants=True)
 
-    root = tempfile.mkdtemp(prefix="dwh_video_offset_cap_compaction_")
-    input_dir = _stage_ntile_slices(vids, root, 3, "video_id")
+    root = scratch_dir("video_offset_cap_compaction_")
+    input_dir = _stage_ntile_slices(vids, 3, "video_id")
 
     index_store = ParquetAppendLog(os.path.join(root, "index"), write_partitions=1)
     stats_store = ParquetAppendLog(os.path.join(root, "stats"), write_partitions=1)
@@ -3420,8 +3404,8 @@ def streaming_semantic_retrain_ingest(spark: SparkSession, sf_dir: str) -> DataF
     )
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    root = tempfile.mkdtemp(prefix="dwh_sem_retrain_")
-    input_dir = _stage_ntile_slices(emb, root, 3, "vec_id")
+    root = scratch_dir("sem_retrain_")
+    input_dir = _stage_ntile_slices(emb, 3, "vec_id")
 
     from dwh_spark.streaming.ingest import ParquetAppendLog
 
@@ -3596,8 +3580,8 @@ def streaming_semantic_window_ingest(spark: SparkSession, sf_dir: str) -> DataFr
     from dwh_spark.streaming.maintenance import run_maintenance_window
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    root = tempfile.mkdtemp(prefix="dwh_sem_window_")
-    input_dir = _stage_ntile_slices(emb, root, 3, "vec_id")
+    root = scratch_dir("sem_window_")
+    input_dir = _stage_ntile_slices(emb, 3, "vec_id")
 
     seeds = (
         spark.read.parquet(os.path.join(input_dir, "batch1.parquet"))
